@@ -714,10 +714,14 @@ def minhash_band_rows(
     base = df.select(id_col, text_col)
     # spread()'s partition probe physically PLANS the input tree — on the
     # incremental tick's deep delta trees that is seconds of driver-side
-    # analysis for a deterministically no-op answer. Callers whose input
-    # is downstream of a shuffle (width = spark.sql.shuffle.partitions >=
-    # defaultParallelism by session construction) pass assume_wide=True
-    # to skip the probe outright (guide §1.2: driver-side cost is real).
+    # analysis for an answer that is almost always "no-op". Callers whose
+    # input is downstream of a shuffle pass assume_wide=True to skip the
+    # probe outright (guide §1.2: driver-side cost is real). That width is
+    # NOT guaranteed: spark.sql.shuffle.partitions >= defaultParallelism
+    # by session construction, but AQE coalescing can merge small
+    # post-groupBy partitions below it. Skipping stays safe because
+    # spread() only ever adds a round-robin repartition: a narrow input
+    # costs parallelism in the band pass, never a different result.
     if not assume_wide:
         base = spread(base)
     if os.environ.get("SPARK_GRAFT_MINHASH_IMPL", "arrow") == "hof":

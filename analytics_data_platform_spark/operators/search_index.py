@@ -54,6 +54,50 @@ from analytics_data_platform_spark.queries.search_ops import (
 
 _MODES = ("boolean", "positional", "scored")
 
+# Parquet bytes of a delete sidecar up to which it is served as a collected
+# literal frame. Past it the collect and the py4j re-ship grow with the
+# sidecar, so the parquet frame itself is served instead (one sidecar scan
+# per consuming action).
+DELETE_LITERAL_MAX_BYTES = 1 << 20
+
+
+def delete_sidecar(index, d: str) -> DataFrame | None:
+    """The merge-on-read delete ids recorded under ``d`` as one frame, or
+    None when there are none; shared by SearchIndex and VectorIndex.
+
+    The sidecar is O(deleted) ids and immutable per file (uuid-named dirs),
+    so the frame is cached on ``index`` keyed on the file listing: repeated
+    serve/mutate calls in one sync tick stop paying a DataSource resolution
+    (guide §1.2). Any writer (delete/apply_deletes/merge_from, this process
+    or another) changes the listing and invalidates. Up to
+    ``DELETE_LITERAL_MAX_BYTES`` the ids are collected once into a literal
+    frame, so consumers pay no sidecar scan job and the anti-join broadcast
+    builds from a local relation; a larger sidecar is served as its parquet
+    frame, so the driver never holds it. The size comes from the listing's
+    file sizes: no extra job."""
+    if not os.path.isdir(d):
+        return None
+    files = tuple(
+        sorted(
+            os.path.join(walk_dir, f)
+            for walk_dir, _, names in os.walk(d)
+            for f in names
+            if f.endswith(".parquet")
+        )
+    )
+    if not files:
+        return None
+    cached = getattr(index, "_dels_cache", None)
+    if cached is not None and cached[0] == files:
+        return cached[1]
+    # each delete call writes its own subdirectory — recursive lookup
+    # flattens them (no partition inference over non-k=v dirs)
+    frame = index.spark.read.option("recursiveFileLookup", "true").parquet(d)
+    if sum(os.path.getsize(f) for f in files) <= DELETE_LITERAL_MAX_BYTES:
+        frame = index.spark.createDataFrame(frame.collect(), frame.schema)
+    index._dels_cache = (files, frame)
+    return frame
+
 
 def adopt_parquet_tree(src: str, dst: str, tag: str) -> None:
     """Move every ``.parquet`` under ``src`` into the mirrored location
@@ -668,36 +712,7 @@ class SearchIndex:
         return os.path.join(self.root, "_deletes")
 
     def _delete_ids(self) -> DataFrame | None:
-        d = self._deletes_dir
-        if not os.path.isdir(d):
-            return None
-        listing = tuple(
-            sorted(
-                os.path.join(os.path.relpath(walk_dir, d), f)
-                for walk_dir, _, files in os.walk(d)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        )
-        if not listing:
-            return None
-        # the sidecar is bounded by design (O(deleted) ids) and immutable
-        # per file (uuid-named dirs): collect it ONCE and serve every
-        # consumer a literal frame keyed on the file listing — repeated
-        # serve/mutate calls in one sync tick stop paying a DataSource
-        # resolution + sidecar scan job per action (guide §1.2), and the
-        # anti-join broadcast builds from a local relation. Any writer
-        # (delete_docs/apply_deletes/merge_from, this process or another)
-        # changes the listing and invalidates.
-        cached = getattr(self, "_dels_cache", None)
-        if cached is not None and cached[0] == listing:
-            return cached[1]
-        # each delete call writes its own subdirectory — recursive lookup
-        # flattens them (no partition inference over non-k=v dirs)
-        frame = self.spark.read.option("recursiveFileLookup", "true").parquet(d)
-        lit = self.spark.createDataFrame(frame.collect(), frame.schema)
-        self._dels_cache = (listing, lit)
-        return lit
+        return delete_sidecar(self, self._deletes_dir)
 
     def _served(self, pruned: DataFrame) -> DataFrame:
         dels = self._delete_ids()

@@ -367,8 +367,9 @@ def delta_merge_parts(
     # measured 1.5× slower end-to-end here; the checkpoint's eager
     # physical planning is the cheaper trade.)
     # assume_wide: newly_m sits downstream of the keeper groupBy
-    # exchange, so its width is the shuffle-partition count by
-    # construction — skip spread()'s whole-tree planning probe
+    # exchange — skip spread()'s whole-tree planning probe (AQE may
+    # coalesce that width below the core count; see minhash_band_rows
+    # for why the skip is still safe)
     new_rows = dedup.minhash_band_rows(
         newly_m.select(*_DOC_COLS), assume_wide=True
     )

@@ -112,6 +112,20 @@ def host_calibration(spark) -> dict[str, float]:
     return calib
 
 
+def compile_counters(spark) -> dict[str, int]:
+    """The driver JVM's cumulative compile work: classes Janino compiled for
+    whole-stage codegen (a codegen-cache miss each) and milliseconds its JIT
+    compiler threads spent. A repeat of an already-run query set should add
+    no Janino compiles (see ``session.CODEGEN_CACHE``)."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return {
+        "codegen_compiles": int(metrics.METRIC_COMPILATION_TIME().getCount()),
+        "jit_compile_ms": int(jit.getTotalCompilationTime()),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
@@ -179,6 +193,13 @@ def main() -> None:
             heavy, json.loads(baseline_path.read_text())
         )
 
+    # read before the calib probes, which compile code of their own
+    env = {
+        "cpus": len(os.sched_getaffinity(0)),
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        **compile_counters(spark),
+    }
     calib = host_calibration(spark)
     print(
         json.dumps(
@@ -196,6 +217,8 @@ def main() -> None:
                 ),
                 "calib": calib,
                 "sf": sf,
+                # additive: the host and the JVM's compile work behind the figures
+                "env": env,
             }
         )
     )

@@ -688,3 +688,29 @@ def test_reshard_crash_windows_heal_forward(spark, tmp_path, sf_dir, monkeypatch
     h3 = SearchIndex(spark, root3, mode="scored", buckets=8)
     assert {tuple(r) for r in h3.bm25(QUERY_TERMS).collect()} == want
     assert h3.buckets == 48 and "pending_reshard" not in h3.stats()
+
+
+def test_delete_sidecar_served_alike_on_both_sides_of_literal_bound(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """Up to DELETE_LITERAL_MAX_BYTES the delete sidecar is served as a
+    collected literal frame; past it, as its parquet frame. Both serve the
+    same results."""
+    from analytics_data_platform_spark.operators import search_index
+
+    d = load_table(spark, sf_dir, "documents")
+    root = str(tmp_path / "s")
+    SearchIndex(spark, root, mode="scored").build(d).delete_docs(
+        [r.doc_id for r in d.where(F.col("doc_id") % 5 == 0).select("doc_id").collect()]
+    )
+
+    served = {}
+    for bound, literal in ((search_index.DELETE_LITERAL_MAX_BYTES, True), (0, False)):
+        monkeypatch.setattr(search_index, "DELETE_LITERAL_MAX_BYTES", bound)
+        idx = SearchIndex(spark, root, mode="scored")
+        assert (not idx._delete_ids().inputFiles()) == literal
+        served[literal] = {tuple(r) for r in idx.bm25(QUERY_TERMS).collect()}
+        erased = idx.bm25(QUERY_TERMS).where(F.col("doc_id") % 5 == 0).count()
+        assert erased == 0
+    assert served[True] == served[False]
+    assert served[True]

@@ -601,3 +601,30 @@ def test_retrain_refuses_sq8_and_heals_crash_windows(spark, tmp_path, sf_dir, mo
         for r in h2.topk(_queries(e)).select("q_id", "vec_id", "cos_sim", "rank").collect()
     }
     assert got2 == want and h2.nlist == 16 and "pending_retrain" not in h2.stats()
+
+
+def test_delete_sidecar_served_alike_on_both_sides_of_literal_bound(
+    spark, tmp_path, sf_dir, monkeypatch
+):
+    """Up to DELETE_LITERAL_MAX_BYTES the delete sidecar is served as a
+    collected literal frame; past it, as its parquet frame. Both serve the
+    same probes."""
+    from analytics_data_platform_spark.operators import search_index
+
+    e = load_table(spark, sf_dir, "embeddings")
+    root = str(tmp_path / "v")
+    VectorIndex(spark, root, nlist=8, nprobe=NPROBE).build(e).delete_vecs(
+        [r.vec_id for r in e.where(F.col("vec_id") % 5 == 3).select("vec_id").collect()]
+    )
+
+    served = {}
+    for bound, literal in ((search_index.DELETE_LITERAL_MAX_BYTES, True), (0, False)):
+        monkeypatch.setattr(search_index, "DELETE_LITERAL_MAX_BYTES", bound)
+        vx = VectorIndex(spark, root)
+        assert (not vx._delete_ids().inputFiles()) == literal
+        served[literal] = {
+            tuple(r)
+            for r in vx.topk(_queries(e)).select("q_id", "vec_id", "cos_sim", "rank").collect()
+        }
+    assert served[True] == served[False]
+    assert served[True] and not any(r[1] % 5 == 3 for r in served[True])
